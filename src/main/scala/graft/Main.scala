@@ -199,28 +199,33 @@ object Main {
         println(s"[main] selected dump key: $key")
         new org.apache.hadoop.fs.Path(root, key).toString
       } else cfg.dumpFile
-    val dataDir =
-      if (dumpFile.nonEmpty) {
-        val conv = java.nio.file.Files.createTempDirectory("graft-dump-pq").toString
-        etl.DumpConvert.convert(spark, dumpFile, conv, cfg.dumpMerge)
-        conv
-      } else cfg.dataDir
-    val instances = Ingest.table(spark, dataDir, "instances")
-    val extra = Ingest.table(spark, dataDir, "instance_extra")
-    val actions = Ingest.table(spark, dataDir, "instance_actions")
+    // the converted parquet lives only as long as this run
+    val converted =
+      if (dumpFile.nonEmpty) Some(java.nio.file.Files.createTempDirectory("graft-dump-pq").toString)
+      else None
+    try {
+      converted.foreach(etl.DumpConvert.convert(spark, dumpFile, _, cfg.dumpMerge))
+      val dataDir = converted.getOrElse(cfg.dataDir)
+      val instances = Ingest.table(spark, dataDir, "instances")
+      val extra = Ingest.table(spark, dataDir, "instance_extra")
+      val actions = Ingest.table(spark, dataDir, "instance_actions")
 
-    val enriched = Enrich.enrichInstances(instances, extra, startUs)
-    val su = Billing.instanceSuHours(actions, enriched, rates, startUs, endUs, outages)
-    val invoices = Billing.projectInvoices(su, rates)
+      val enriched = Enrich.enrichInstances(instances, extra, startUs)
+      val su = Billing.instanceSuHours(actions, enriched, rates, startUs, endUs, outages)
+      val invoices = Billing.projectInvoices(su, rates)
 
-    val isoFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
-    val rows = InvoiceSink.csvRows(invoices, invoiceMonth,
-      start.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
-      end.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
-      // timespec="seconds" parity with billing.py:160
-      java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
-        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).format(isoFmt))
-    InvoiceSink.writeCsv(rows, cfg.outputDir)
+      val isoFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
+      val rows = InvoiceSink.csvRows(invoices, invoiceMonth,
+        start.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
+        end.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
+        // timespec="seconds" parity with billing.py:160
+        java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
+          .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).format(isoFmt))
+      InvoiceSink.writeCsv(rows, cfg.outputDir)
+    } finally converted.foreach { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    }
 
     // S7 — the triple upload (billing.py:244-293): same body to primary
     // (skippable, --no-upload-to-primary), daily, and archive keys, in

@@ -20,8 +20,10 @@ object SparkEntry {
     val ev = graft.etl.Ingest.table(spark, dir, "events")
 
     // events → instance_actions: signup creates, click starts, purchase
-    // stops, view shelves; error rides the message=="Error" path.
+    // stops, view shelves; error rides the message=="Error" path. event_id
+    // plays instance_actions.id, the tiebreak for same-second events.
     val actions = ev.select(
+      col("event_id").as("id"),
       concat(lit("vm-"), col("user_id")).as("instance_uuid"),
       col("ts").as("created_at"),
       when(col("event_type") === "signup", "create")

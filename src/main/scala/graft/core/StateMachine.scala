@@ -26,13 +26,13 @@ import graft.core.Types.{BillingEvent, Runtime}
   *
   * Documented deviation: the reference raises `AttributeError` when an
   * instance has no state-mapped events (current state None at model.py:124 /
-  * 127). This engine yields `Runtime.zero` instead — a dead instance should
+  * 127). This engine yields a zero `Runtime` instead — a dead instance should
   * not kill a 100 TB job.
   */
 object StateMachine {
 
   /** action name → state (model.py:141-150). */
-  val TriggerToState: Map[String, String] = Map(
+  private val TriggerToState: Map[String, String] = Map(
     "unshelve" -> "Running",
     "create"   -> "Running",
     "start"    -> "Running",
@@ -41,12 +41,8 @@ object StateMachine {
     "delete"   -> "Deleted"
   )
 
-  /** Incremental fold buffer: the machine's full state between events.
-    * Exposed so the Structured Streaming variant
-    * (graft.streaming.StreamingBilling) folds the SAME transition logic
-    * event-at-a-time across micro-batches.
-    */
-  final case class StateBuf(
+  /** Fold buffer: the machine's full state between events. */
+  private final case class StateBuf(
       current: String, enteredAtUs: Long, runningUs: Long, stoppedUs: Long) {
     def exitAt(t: Long): StateBuf = current match {
       case "Running" => copy(runningUs = runningUs + (t - enteredAtUs))
@@ -54,12 +50,12 @@ object StateMachine {
       case _         => this // Shelved / Deleted / Error time is discarded
     }
   }
-  object StateBuf { val empty: StateBuf = StateBuf(null, 0L, 0L, 0L) }
+  private object StateBuf { val empty: StateBuf = StateBuf(null, 0L, 0L, 0L) }
 
   /** One transition: event time must already be clamped into the billing
     * window (model.py:98).
     */
-  def step(buf: StateBuf, tClamped: Long, name: String, message: String): StateBuf =
+  private def step(buf: StateBuf, tClamped: Long, name: String, message: String): StateBuf =
     if (message == "Error") {
       // always transitions, even Error→Error (model.py:101-107)
       (if (buf.current != null) buf.exitAt(tClamped) else buf)

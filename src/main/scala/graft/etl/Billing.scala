@@ -20,8 +20,8 @@ import graft.sql.RuntimeSql
 object Billing {
 
   /** Per-instance billable runtime. Input `events` nova-shaped:
-    * (instance_uuid, created_at TIMESTamp, action, message); `instances`
-    * output of [[Enrich.enrichInstances]].
+    * (id, instance_uuid, created_at TIMESTAMP, action, message);
+    * `instances` output of [[Enrich.enrichInstances]].
     *
     * @return one row per instance with positive billable hours:
     *         project_id, su_type, service_units, runtime_hours, su_hours
@@ -35,19 +35,17 @@ object Billing {
       outages: Seq[(Long, Long)] = Seq.empty
   ): DataFrame = {
     // model.py:215 orders by created_at only; sqlite's stable sort makes
-    // the SOURCE ROW ORDER the tiebreak for equal timestamps. A stable
-    // id column (nova instance_actions.id) is the only partition-layout-
-    // independent equivalent — monotonically_increasing_id would flip
-    // equal-timestamp event order (and the invoice) whenever file splits
-    // or AQE coalescing change.
-    val tie =
-      if (events.columns.contains("id")) col("id").cast("long")
-      else if (events.columns.contains("event_id")) col("event_id").cast("long")
-      else monotonically_increasing_id() // documented fallback: single-file inputs only
+    // the SOURCE ROW ORDER the tiebreak for equal timestamps. Nova's
+    // instance_actions.id is that order on every input path. Any order
+    // taken from the physical layout would flip equal-timestamp events
+    // (and the invoice) whenever file splits or AQE coalescing change.
+    require(events.columns.contains("id"),
+      "events has no `id` column (nova instance_actions.id), which breaks " +
+        "ties between same-second events; columns: " + events.columns.mkString(", "))
     val shaped = events.select(
       col("instance_uuid").as("key"),
       unix_micros(col("created_at")).as("ts_us"),
-      tie.as("tie"),
+      col("id").cast("long").as("tie"),
       RuntimeSql.mapState(col("action"), col("message")).as("state"))
 
     val deleted = instances
@@ -80,12 +78,11 @@ object Billing {
         (col("runtime_hours") * col("service_units")).as("su_hours"))
   }
 
-  /** The 6-row rates dimension shared by the aggregate and the pivot
-    * sinks. rate_display preserves the CLI-provided scale exactly like
-    * the reference's str(Decimal) (billing.py:213 writes the Decimal
-    * raw); the decimal `rate` column is for math only.
+  /** The 6-row rates dimension. rate_display preserves the CLI-provided
+    * scale exactly like the reference's str(Decimal) (billing.py:213
+    * writes the Decimal raw); the decimal `rate` column is for math only.
     */
-  def ratesDim(spark: org.apache.spark.sql.SparkSession, rates: Rates): DataFrame = {
+  private def ratesDim(spark: org.apache.spark.sql.SparkSession, rates: Rates): DataFrame = {
     import spark.implicits._
     graft.core.Types.SuTypes
       .map(t => (t, rates.rateFor(t), rates.rateFor(t).toString, rates.suNameFor(t)))

@@ -33,6 +33,8 @@ object DumpConvert {
 
   /** The three tables the billing pipeline reads (model.py:228-244,
     * 205-209) and the column types `Ingest.table` expects downstream.
+    * `instance_actions.id` is the tiebreak `Billing` uses for same-second
+    * events.
     */
   val tableSchemas: Map[String, Seq[(String, String)]] = Map(
     "instances" -> Seq(
@@ -43,7 +45,7 @@ object DumpConvert {
     "instance_extra" -> Seq(
       "instance_uuid" -> "string", "pci_requests" -> "string"),
     "instance_actions" -> Seq(
-      "instance_uuid" -> "string", "created_at" -> "timestamp",
+      "id" -> "long", "instance_uuid" -> "string", "created_at" -> "timestamp",
       "action" -> "string", "message" -> "string"))
 
   /** Decode a mysqldump single-quoted literal body (escapes per the MySQL
@@ -146,8 +148,9 @@ object DumpConvert {
   /** Stage a non-splittable dump into a form the distributed parse can
     * split. `.gz` inputs stream-gunzip ONCE through Hadoop IO (works for
     * `file://` and `s3a://` alike) into `stagingDir`; anything else
-    * passes through untouched. The staged copy is registered for
-    * delete-on-exit.
+    * passes through untouched. The caller deletes the staged copy. A
+    * corrupt or truncated `.gz` fails with an `IOException` that names
+    * `dumpPath`, and leaves no partial copy behind.
     *
     * `stagingDir` defaults to the local tmpdir (right for local mode and
     * for a driver-side staging step); a multi-executor cluster should
@@ -179,12 +182,35 @@ object DumpConvert {
         s"graft-stage-${java.util.UUID.randomUUID()}-" +
           src.getName.stripSuffix(".gz"))
       val dstFs = dst.getFileSystem(conf)
-      val in = new java.util.zip.GZIPInputStream(srcFs.open(src))
-      val out = dstFs.create(dst, true)
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, true)
-      dstFs.deleteOnExit(dst)
+      val raw = srcFs.open(src)
+      try {
+        val in = new java.util.zip.GZIPInputStream(raw)
+        org.apache.hadoop.io.IOUtils.copyBytes(in, dstFs.create(dst, true), 1 << 20, true)
+      } catch {
+        case e: java.io.IOException =>
+          raw.close()
+          dstFs.delete(dst, false)
+          throw new java.io.IOException(s"cannot gunzip dump $dumpPath: ${e.getMessage}", e)
+      }
       dst.toString
     }
+
+  /** Stage every dump, run `f` over the staged paths, and delete the
+    * staged copies afterwards, also when staging or `f` fails.
+    */
+  private def withStaged[T](spark: SparkSession, dumps: Seq[String])(
+      f: Seq[String] => T): T = {
+    val copies = scala.collection.mutable.ArrayBuffer.empty[String]
+    try f(dumps.map { d =>
+      val staged = stageSplittable(spark, d)
+      if (staged != d) copies += staged
+      staged
+    })
+    finally copies.foreach { c =>
+      val p = new org.apache.hadoop.fs.Path(c)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
+    }
+  }
 
   /** The single dump file, verified: the parse relies on
     * `monotonically_increasing_id` reflecting file-offset order, which
@@ -217,20 +243,13 @@ object DumpConvert {
     createColumns(lines)
   }
 
-  /** One table of the dump as a typed DataFrame: distributed parse of its
-    * INSERT lines, columns named from CREATE order, cast to the target
+  /** One table of a staged dump as a typed DataFrame: distributed parse
+    * of its INSERT lines, columns named from CREATE order (`allCols`, the
+    * dump's DDL map, scanned once for all tables), cast to the target
     * schema. Unknown target columns (absent from this dump's DDL) fail
     * loudly rather than silently producing nulls.
     */
-  def loadTable(spark: SparkSession, dumpPath: String, table: String): DataFrame = {
-    val staged = stageSplittable(spark, dumpPath)
-    loadTableWith(spark, staged, table, tableColumns(spark, staged))
-  }
-
-  /** Same, with the dump's DDL map precomputed — `convert` scans the DDL
-    * once for all three tables instead of once per table.
-    */
-  private def loadTableWith(spark: SparkSession, dumpPath: String,
+  private def loadTable(spark: SparkSession, dumpPath: String,
       table: String, allCols: Map[String, Seq[String]]): DataFrame = {
     import spark.implicits._
     val createOrder = allCols.getOrElse(table,
@@ -280,13 +299,12 @@ object DumpConvert {
     val p = new org.apache.hadoop.fs.Path(dumpPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.getFileStatus(p).isDirectory) convertDir(spark, dumpPath, outDir, merge)
-    else {
-      // stage ONCE for all three tables: the gunzip cost is paid one time,
-      // every per-table parse below splits across executors
-      val staged = stageSplittable(spark, dumpPath)
+    else withStaged(spark, Seq(dumpPath)) { case Seq(staged) =>
+      // staged ONCE for all three tables: the gunzip cost is paid one
+      // time, every per-table parse below splits across executors
       val allCols = tableColumns(spark, staged)
       tableSchemas.keys.toSeq.sorted.foreach { t =>
-        loadTableWith(spark, staged, t, allCols)
+        loadTable(spark, staged, t, allCols)
           .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       }
     }
@@ -333,21 +351,22 @@ object DumpConvert {
     val dumps = listDumps(fs, p)
     require(dumps.nonEmpty, s"no .sql/.sql.gz dumps found under $dumpDir")
     // stage + DDL-scan each dump once, not once per table
-    val staged = dumps.map(d => stageSplittable(spark, d))
-    val colMaps = staged.map(d => d -> tableColumns(spark, d))
-    tableSchemas.keys.toSeq.sorted.foreach { t =>
-      val candidates = colMaps.collect {
-        case (d, cols) if cols.contains(t) => loadTableWith(spark, d, t, cols)
+    withStaged(spark, dumps) { staged =>
+      val colMaps = staged.map(d => d -> tableColumns(spark, d))
+      tableSchemas.keys.toSeq.sorted.foreach { t =>
+        val candidates = colMaps.collect {
+          case (d, cols) if cols.contains(t) => loadTable(spark, d, t, cols)
+        }
+        require(candidates.nonEmpty,
+          s"no dump under $dumpDir has CREATE TABLE `$t`")
+        val chosen = merge match {
+          // all-empty falls back to the first candidate: an empty but
+          // correctly-typed table, same as single-dump zero-INSERT behavior
+          case "first" => candidates.find(!_.isEmpty).getOrElse(candidates.head)
+          case "union" => candidates.reduce(_.unionByName(_))
+        }
+        chosen.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
       }
-      require(candidates.nonEmpty,
-        s"no dump under $dumpDir has CREATE TABLE `$t`")
-      val chosen = merge match {
-        // all-empty falls back to the first candidate: an empty but
-        // correctly-typed table, same as single-dump zero-INSERT behavior
-        case "first" => candidates.find(!_.isEmpty).getOrElse(candidates.head)
-        case "union" => candidates.reduce(_.unionByName(_))
-      }
-      chosen.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
   }
 

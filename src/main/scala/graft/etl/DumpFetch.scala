@@ -10,12 +10,11 @@ import java.time.format.DateTimeFormatter
   * non-empty listing; here the listing itself is a caller-supplied
   * function (a real S3 client, `FileSystem.listStatus` over `s3a://`, or a
   * test fixture), and everything around it — prefix templates, fallback
-  * order, first-object rule, local filename, gunzip-name derivation — is
-  * deterministic string logic.
+  * order, first-object rule — is deterministic string logic.
   *
-  * In a live deployment the selected key feeds `s3a://bucket/key` straight
-  * into Spark/Hadoop IO (no boto analog needed); the zero-egress sandbox
-  * blocks exercising that last hop, not computing it.
+  * The selected key feeds `s3a://bucket/key` straight into Spark/Hadoop
+  * IO, so the reference's download to `/tmp` has no counterpart here;
+  * `DumpConvert.stageSplittable` takes the place of its `gzip -d`.
   */
 object DumpFetch {
 
@@ -52,21 +51,6 @@ object DumpFetch {
     candidatePrefixes(date, controllers).iterator
       .map(p => list(p).sorted)
       .collectFirst { case keys if keys.nonEmpty => keys.head }
-
-  /** Local download target: `/tmp/{basename}` (fetch.py:75-76). */
-  def localDownloadPath(key: String, tmpDir: String = "/tmp"): String =
-    s"$tmpDir/${key.split('/').last}"
-
-  /** Post-gunzip filename: strip one trailing `.gz` (fetch.py:83-92 —
-    * `gzip -d` renames in place); non-.gz paths pass through unchanged.
-    */
-  def uncompressedPath(path: String): String =
-    if (path.endsWith(".gz")) path.dropRight(3) else path
-
-  /** The Hadoop-IO form of a selected key — what `spark.read`/`Files`
-    * consume when the cluster has S3 credentials configured.
-    */
-  def s3aUri(bucket: String, key: String): String = s"s3a://$bucket/$key"
 
   /** A prefix-listing function backed by Hadoop `FileSystem` — the same
     * API over `file://` fixtures and `s3a://` buckets, which is what lets

@@ -111,33 +111,6 @@ object Enrich {
         element_at(pci, 1).getField("count").try_cast("int").isNull,
         concat(lit("invalid pci count "), element_at(pci, 1).getField("count")))
 
-  /** Lenient enrichment: returns (clean rows, quarantined rows with a
-    * `quarantine_reason` column). One pass; the split is two filters over
-    * the same cached-or-recomputed projection, both codegen'd.
-    */
-  def enrichInstancesLenient(
-      instances: DataFrame,
-      instanceExtra: DataFrame,
-      startUs: Long
-  ): (DataFrame, DataFrame) = {
-    val joined = joinInstanceExtra(
-      instances.filter(liveInstances(startUs)), instanceExtra)
-    val classified = joined
-      .withColumn("pci", parsedPci(col("pci_requests")))
-      .withColumn("su_type", gpuSuTypeLenient(col("pci")))
-      .withColumn("quarantine_reason", quarantineReason(col("pci")))
-    val clean = classified
-      .filter(col("su_type").isNotNull && col("quarantine_reason").isNull)
-      .withColumn("gpu_count", gpuCountLenient(col("pci")))
-      .withColumn("service_units",
-        serviceUnits(col("gpu_count"), col("vcpus"), col("memory_mb")))
-      .drop("pci", "pci_requests", "quarantine_reason")
-    val quarantined = classified
-      .filter(col("quarantine_reason").isNotNull)
-      .drop("pci", "su_type")
-    (clean, quarantined)
-  }
-
   /** Full enrichment: R2 + R3 + F2 + F3 + F1 in one projection. Input:
     * nova-shaped `instances` (uuid, hostname, instance_type_id, memory_mb,
     * vcpus, deleted_at, deleted, project_id) and `instance_extra`

@@ -33,29 +33,4 @@ object Ingest {
       else acc
     }
   }
-
-  /** S1's live-database path: read a Nova table over JDBC with predicate-
-    * pushdown-friendly partitioning on a numeric column. (The survey's
-    * note "spark.read.jdbc for a live Nova DB"; untestable in this
-    * zero-egress environment — kept thin and config-only.)
-    */
-  def jdbcTable(
-      spark: SparkSession,
-      url: String,
-      table: String,
-      partitionColumn: String,
-      lowerBound: Long,
-      upperBound: Long,
-      numPartitions: Int
-  ): DataFrame =
-    spark.read
-      .format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", numPartitions)
-      .option("fetchsize", 10000)
-      .load()
 }

@@ -2,53 +2,12 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.Types.{Rates, SuTypes}
 
 /** Invoice shaping and the CSV sink contract
   * (/root/reference/src/openstack_billing_db/billing.py:159-224) plus the
   * S3 key templates (billing.py:244-293) as pure functions.
   */
 object InvoiceSink {
-
-  /** R8 — long → wide: one row per project with a `<type>_su_hours` column
-    * per SU type (billing.py:105-113). Absent types are zero-filled like
-    * the dataclass defaults (billing.py:54-59).
-    */
-  def pivotWide(longInvoices: DataFrame): DataFrame = {
-    val wide = longInvoices
-      .groupBy("project_id")
-      .pivot("su_type", SuTypes)
-      .sum("su_hours")
-    SuTypes.foldLeft(wide) { (df, t) =>
-      df.withColumn(s"${t}_su_hours", coalesce(col(s"`$t`"), lit(0L))).drop(t)
-    }
-  }
-
-  /** R7 — wide → long: up to six rows per project in the reference's
-    * unpivot order, dropping hours == 0 rows (billing.py:188-224). Uses
-    * `stack` (Spark's UNPIVOT) so the generator stays codegen-friendly.
-    */
-  def unpivotLong(wide: DataFrame, rates: Rates): DataFrame = {
-    val stackArgs = SuTypes
-      .map(t => s"'$t', ${t}_su_hours")
-      .mkString(s"stack(${SuTypes.size}, ", ", ", ") as (su_type, su_hours)")
-    val ratesDim = Billing.ratesDim(wide.sparkSession, rates)
-
-    wide
-      .select(col("project_id"), expr(stackArgs))
-      .filter(col("su_hours") > 0) // billing.py:204
-      .join(broadcast(ratesDim), Seq("su_type"))
-      .withColumn("cost", (col("rate") * col("su_hours")).cast("decimal(38,6)"))
-      .select("project_id", "su_type", "su_name", "su_hours", "rate", "rate_display", "cost")
-  }
-
-  /** The fixed 16-column header (billing.py:167-186). */
-  val CsvHeader: Seq[String] = Seq(
-    "Invoice Month", "Report Start Time", "Report End Time",
-    "Project - Allocation", "Project - Allocation ID", "Manager (PI)",
-    "Cluster Name", "Invoice Email", "Invoice Address", "Institution",
-    "Institution - Specific Code", "SU Hours (GBhr or SUhr)", "SU Type",
-    "Rate", "Cost", "Generated At")
 
   /** Shape long invoices into the 16-column CSV rows (billing.py:188-224):
     * constant identity columns (pi/institution empty, billing.py:130-131;
@@ -92,21 +51,6 @@ object InvoiceSink {
       .option("quote", "|")
       .option("emptyValue", "")
       .csv(path)
-
-  /** Month-partitioned parquet sink for the long invoice table: the
-    * cumulative-regeneration workflow (billing.py:275-284 re-uploads
-    * daily) becomes partition overwrite — rewriting one month never
-    * touches the others, and month-filtered reads prune partitions at
-    * the file listing.
-    */
-  def writePartitioned(longInvoices: DataFrame, invoiceMonth: String, path: String): Unit =
-    longInvoices
-      .withColumn("invoice_month", lit(invoiceMonth))
-      .write
-      .partitionBy("invoice_month")
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
 
   /** S7 — the three S3 destination keys (billing.py:267-291). The daily key
     * subtracts one second from the exclusive end to get the inclusive date

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-column data layout for file-level skipping.
@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * effect is file/row-group pruning for filters on any z-ordered column,
   * not just the lead sort key.
   *
-  * The key is a pure codegen expression (shift/mask/or chain) — no UDF,
-  * no shuffle beyond the one repartitionByRange the write needs anyway.
+  * The key is a pure codegen expression (shift/mask/or chain) — no UDF.
+  * A z-ordered write is `repartitionByRange` plus `sortWithinPartitions`
+  * on it; BucketingSpec checks the per-file envelope that gives.
   */
 object Layout {
 
@@ -76,21 +77,4 @@ object Layout {
         .bitwiseOR(shiftleft(shiftright(bl, i).bitwiseAND(lit(1L)), 2 * i))
     }.reduce(_.bitwiseOR(_))
   }
-
-  /** Range-partition by the z-key and sort files internally by it: every
-    * output file covers one contiguous z-range = a small union of quad
-    * cells, i.e. a tight rectangle-ish envelope in (a, b) space.
-    */
-  def writeZOrdered(
-      df: DataFrame,
-      a: String,
-      b: String,
-      bits: Int,
-      numFiles: Int,
-      path: String): Unit =
-    df.withColumn("__zkey", zorderKey(col(a), col(b), bits))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-      .write.mode("overwrite").parquet(path)
 }

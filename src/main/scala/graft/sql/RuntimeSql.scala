@@ -91,23 +91,6 @@ object RuntimeSql {
       .drop("tie", "synth", "prev_state")
   }
 
-  /** Relational compaction (see graft.core.Compaction): the state each
-    * key is in after its closed event prefix = the LAST merged run.
-    * Store this tiny (key, state) table; bill later windows from it plus
-    * the tail events.
-    */
-  def snapshots(prefixEvents: DataFrame): DataFrame =
-    stateRuns(prefixEvents)
-      .filter(col("next_ts_us").isNull)
-      .select(col("key"), col("state"))
-
-  /** Seed tail events with snapshot states: the snapshot enters at `t0`
-    * with a tie below any real event, so it sorts first within the key.
-    */
-  def seededEvents(tailEvents: DataFrame, snapshots: DataFrame, t0: Long): DataFrame =
-    tailEvents.unionByName(snapshots.select(
-      col("key"), col("state"), lit(t0).as("ts_us"), lit(Long.MinValue).as("tie")))
-
   /** In-window microseconds per (key): `running_us`, `stopped_us` for a
     * single billing window (K1).
     */

@@ -49,9 +49,9 @@ class MainSpec extends AnyFunSuite {
       .toDF("instance_uuid", "pci_requests")
       .write.mode("overwrite").parquet(s"$dataDir/instance_extra.parquet")
     Seq(
-      ("i1", ts(start), "create", ""),
-      ("i1", ts(start + 10 * HOUR), "delete", ""))
-      .toDF("instance_uuid", "created_at", "action", "message")
+      (1L, "i1", ts(start), "create", ""),
+      (2L, "i1", ts(start + 10 * HOUR), "delete", ""))
+      .toDF("id", "instance_uuid", "created_at", "action", "message")
       .write.mode("overwrite").parquet(s"$dataDir/instance_actions.parquet")
 
     // run(cfg, session), not main(): main owns (and stops) its own session

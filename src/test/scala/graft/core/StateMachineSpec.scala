@@ -244,16 +244,26 @@ class StateMachineSpec extends AnyFunSuite {
   test("no state-mapped events yields zero runtime, not a crash") {
     val r = run(Seq(ev(jan2_2000, "volume_attach")), jan1_2000, feb1_2000,
       Some(jan2_2000 + DAY))
-    assert(r == Runtime.zero)
-    assert(run(Nil, jan1_2000, feb1_2000) == Runtime.zero)
+    assert(r == Runtime(0L, 0L))
+    assert(run(Nil, jan1_2000, feb1_2000) == Runtime(0L, 0L))
   }
 
   // model.py:38-46 service-unit formula (F1)
   test("service units: gpu count wins, else truncated max(vcpus, mem/4GiB)") {
-    assert(Flavor(1, "cpu", 1, 4096, 20).serviceUnits == 1)
-    assert(Flavor(1, "cpu", 2, 4096, 20).serviceUnits == 2)
-    assert(Flavor(1, "cpu", 1, 6144, 20).serviceUnits == 1) // int(1.5) truncates
-    assert(Flavor(1, "cpu", 1, 8192, 20).serviceUnits == 2)
-    assert(Flavor(1, "gpu_v100", 8, 65536, 20, gpuCount = 2).serviceUnits == 2)
+    val spark = graft.SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    // (gpu_count, vcpus, memory_mb) → expected service units
+    val cases = Seq(
+      (0, 1, 4096L) -> 1L,
+      (0, 2, 4096L) -> 2L,
+      (0, 1, 6144L) -> 1L, // int(1.5) truncates
+      (0, 1, 8192L) -> 2L,
+      (2, 8, 65536L) -> 2L)
+    val got = cases.map(_._1).toDF("gpu_count", "vcpus", "memory_mb")
+      .select(graft.etl.Enrich.serviceUnits(
+        col("gpu_count"), col("vcpus"), col("memory_mb")))
+      .as[Long].collect().toSeq
+    assert(got == cases.map(_._2))
   }
 }

@@ -8,7 +8,7 @@ import graft.core.Types.Rates
 
 /** End-to-end billing pipeline over a nova-shaped in-memory fixture:
   * enrichment (R2/R3/F1-F3) → state machine (K1/K2) → aggregation (A1-A3)
-  * → pivots (R7/R8) → CSV contract (S6) and key templates (S7).
+  * → CSV contract (S6) and key templates (S7).
   */
 class BillingEtlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -41,14 +41,14 @@ class BillingEtlSpec extends AnyFunSuite {
   ).toDF("instance_uuid", "pci_requests")
 
   lazy val actions = Seq(
-    ("i1", ts(start), "create", ""),
-    ("i1", ts(start + 10 * HOUR), "delete", ""),
-    ("i2", ts(start), "create", ""),
-    ("i2", ts(start + 5 * HOUR + HOUR / 2), "delete", ""),
-    ("i3", ts(start - 200 * HOUR), "create", ""),
-    ("i4", ts(start), "create", ""),
-    ("i4", ts(start + HOUR), "stop", "")
-  ).toDF("instance_uuid", "created_at", "action", "message")
+    (1L, "i1", ts(start), "create", ""),
+    (2L, "i1", ts(start + 10 * HOUR), "delete", ""),
+    (3L, "i2", ts(start), "create", ""),
+    (4L, "i2", ts(start + 5 * HOUR + HOUR / 2), "delete", ""),
+    (5L, "i3", ts(start - 200 * HOUR), "create", ""),
+    (6L, "i4", ts(start), "create", ""),
+    (7L, "i4", ts(start + HOUR), "stop", "")
+  ).toDF("id", "instance_uuid", "created_at", "action", "message")
 
   lazy val enriched = Enrich.enrichInstances(instances, instanceExtra, start)
 
@@ -86,7 +86,7 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(su("i1") == 8L) // 10h − 2h outage
   }
 
-  test("A1/A2 aggregate + R8 pivot + R7 unpivot round-trip") {
+  test("A1/A2 aggregate: su-hours and cost per (project, SU type)") {
     val su = Billing.instanceSuHours(actions, enriched, rates, start, end)
     val long = Billing.projectInvoices(su, rates)
     val got = long.collect().map(r => (r.getAs[String]("project_id"),
@@ -95,19 +95,6 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(got(("projA", "cpu")) == ((20L, "0.260000")))       // 20 × 0.013
     assert(got(("projA", "gpu_v100")) == ((12L, "14.568000"))) // 12 × 1.214
     assert(got(("projB", "cpu")) == ((1L, "0.013000")))        // i4's 1h
-
-    val wide = InvoiceSink.pivotWide(long.select("project_id", "su_type", "su_hours"))
-    val wrow = wide.filter($"project_id" === "projA").collect()(0)
-    assert(wrow.getAs[Long]("cpu_su_hours") == 20L)
-    assert(wrow.getAs[Long]("gpu_v100_su_hours") == 12L)
-    assert(wrow.getAs[Long]("gpu_k80_su_hours") == 0L)
-
-    val roundTrip = InvoiceSink.unpivotLong(wide, rates)
-      .select("project_id", "su_type", "su_hours", "cost")
-    val back = roundTrip.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("su_hours")).toMap
-    assert(back == Map(("projA", "cpu") -> 20L, ("projA", "gpu_v100") -> 12L,
-      ("projB", "cpu") -> 1L))
   }
 
   test("S6 CSV contract: 16 columns, '|' quote, HALF_UP cents") {
@@ -116,7 +103,12 @@ class BillingEtlSpec extends AnyFunSuite {
     val rows = InvoiceSink.csvRows(long, "2024-01",
       "2024-01-01T00:00:00+00:00", "2024-02-01T00:00:00+00:00",
       "2024-02-01T07:00:00+00:00")
-    assert(rows.columns.toSeq == InvoiceSink.CsvHeader)
+    assert(rows.columns.toSeq == Seq( // billing.py:167-186
+      "Invoice Month", "Report Start Time", "Report End Time",
+      "Project - Allocation", "Project - Allocation ID", "Manager (PI)",
+      "Cluster Name", "Invoice Email", "Invoice Address", "Institution",
+      "Institution - Specific Code", "SU Hours (GBhr or SUhr)", "SU Type",
+      "Rate", "Cost", "Generated At"))
 
     val dir = java.nio.file.Files.createTempDirectory("invoice").toString
     InvoiceSink.writeCsv(rows, dir)
@@ -170,8 +162,8 @@ class BillingEtlSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dataDir/instances.parquet")
     Seq(("i1", null: String)).toDF("instance_uuid", "pci_requests")
       .write.mode("overwrite").parquet(s"$dataDir/instance_extra.parquet")
-    Seq(("i1", ts(start), "create", ""), ("i1", ts(start + 10 * HOUR), "delete", ""))
-      .toDF("instance_uuid", "created_at", "action", "message")
+    Seq((1L, "i1", ts(start), "create", ""), (2L, "i1", ts(start + 10 * HOUR), "delete", ""))
+      .toDF("id", "instance_uuid", "created_at", "action", "message")
       .write.mode("overwrite").parquet(s"$dataDir/instance_actions.parquet")
 
     graft.Main.run(graft.Main.parseArgs(Seq(
@@ -209,26 +201,26 @@ class BillingEtlSpec extends AnyFunSuite {
       "Invoices/2024-01/Service Invoices/NERC OpenStack 2024-01-31.csv")))
   }
 
+  /** The lenient F3 columns over pci_requests payloads: uuid →
+    * (su_type, quarantine_reason). A row is clean when su_type resolves
+    * and no reason is set.
+    */
+  private def lenient(extra: org.apache.spark.sql.DataFrame): Map[String, (String, String)] =
+    extra.withColumn("pci", Enrich.parsedPci(col("pci_requests")))
+      .select(col("instance_uuid"), Enrich.gpuSuTypeLenient(col("pci")),
+        Enrich.quarantineReason(col("pci")))
+      .collect().map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))).toMap
+
   test("lenient enrichment quarantines bad pci rows instead of failing") {
-    val badInstances = Seq(
-      ("b1", "h", 1L, 4096L, 1, None: Option[java.sql.Timestamp], 0, "projQ"),
-      ("b2", "h", 1L, 4096L, 1, None: Option[java.sql.Timestamp], 0, "projQ"),
-      ("b3", "h", 1L, 4096L, 1, None: Option[java.sql.Timestamp], 0, "projQ")
-    ).toDF("uuid", "hostname", "instance_type_id", "memory_mb", "vcpus",
-      "deleted_at", "deleted", "project_id")
     val badExtra = Seq(
       ("b1", """[{"count": "1", "alias_name": "H100"}]"""),      // unknown alias
       ("b2", """[{"count": "1", "alias_name": "V100"}, {"count": "1", "alias_name": "K80"}]"""), // 2 entries
       ("b3", """[{"count": "2", "alias_name": "K80"}]""")        // fine
     ).toDF("instance_uuid", "pci_requests")
-    val (clean, quarantined) = Enrich.enrichInstancesLenient(badInstances, badExtra, start)
-    val cleanRows = clean.select("uuid", "su_type").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cleanRows == Map("b3" -> "gpu_k80"))
-    val qRows = quarantined.select("uuid", "quarantine_reason").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(qRows("b1") == "invalid pci alias h100")
-    assert(qRows("b2") == "multiple pci_requests entries")
+    assert(lenient(badExtra) == Map(
+      "b1" -> ((null, "invalid pci alias h100")),
+      "b2" -> ((null, "multiple pci_requests entries")),
+      "b3" -> (("gpu_k80", null))))
   }
 
   test("strict mode fails on a non-numeric pci count; lenient quarantines it") {
@@ -247,26 +239,7 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("CAST_INVALID_INPUT") ||
       Option(ex.getCause).exists(_.getMessage.contains("CAST_INVALID_INPUT")))
 
-    val (clean, quarantined) = Enrich.enrichInstancesLenient(inst, extra, start)
-    assert(clean.count() == 0)
-    val q = quarantined.select("uuid", "quarantine_reason").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(q("c1") == "invalid pci count two")
-  }
-
-  test("partitioned invoice sink: dynamic month overwrite, partition pruning layout") {
-    val long = Billing.projectInvoices(
-      Billing.instanceSuHours(actions, enriched, rates, start, end), rates)
-    val dir = java.nio.file.Files.createTempDirectory("inv_part").toString
-    InvoiceSink.writePartitioned(long, "2024-01", dir)
-    InvoiceSink.writePartitioned(long, "2024-02", dir)
-    // overwriting one month leaves the other intact (dynamic mode)
-    InvoiceSink.writePartitioned(long.limit(1), "2024-02", dir)
-    val months = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("invoice_month=")).sorted
-    assert(months.toSeq == Seq("invoice_month=2024-01", "invoice_month=2024-02"))
-    val back = spark.read.parquet(dir)
-    assert(back.filter($"invoice_month" === "2024-01").count() == long.count())
-    assert(back.filter($"invoice_month" === "2024-02").count() == 1)
+    assert(lenient(extra) == Map("c1" -> (("gpu_v100", "invalid pci count two"))))
   }
 
   test("F6 default window") {

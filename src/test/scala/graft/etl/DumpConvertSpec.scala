@@ -65,12 +65,13 @@ class DumpConvertSpec extends AnyFunSuite {
         |);
         |INSERT INTO `instance_extra` VALUES ('i1',NULL);
         |CREATE TABLE `instance_actions` (
+        |  `id` int NOT NULL AUTO_INCREMENT,
         |  `instance_uuid` varchar(36) NOT NULL,
         |  `created_at` datetime DEFAULT NULL,
         |  `action` varchar(255) DEFAULT NULL,
         |  `message` varchar(255) DEFAULT NULL
         |);
-        |INSERT INTO `instance_actions` VALUES ('i1','2024-01-01 00:00:00','create',''),('i1','2024-01-01 10:00:00','delete','');
+        |INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create',''),(2,'i1','2024-01-01 10:00:00','delete','');
         |""".stripMargin
     val dumpFile = java.nio.file.Files.createTempFile("graft-dump", ".sql")
     java.nio.file.Files.writeString(dumpFile, dump)
@@ -126,12 +127,13 @@ class DumpConvertSpec extends AnyFunSuite {
         |);
         |INSERT INTO `instance_extra` VALUES ('i1',NULL);
         |CREATE TABLE `instance_actions` (
+        |  `id` int NOT NULL AUTO_INCREMENT,
         |  `instance_uuid` varchar(36) NOT NULL,
         |  `created_at` datetime DEFAULT NULL,
         |  `action` varchar(255) DEFAULT NULL,
         |  `message` varchar(255) DEFAULT NULL
         |);
-        |INSERT INTO `instance_actions` VALUES ('i1','2024-01-01 00:00:00','create',''),('i1','2024-01-01 10:00:00','delete','');
+        |INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create',''),(2,'i1','2024-01-01 10:00:00','delete','');
         |""".stripMargin
     val gz = java.nio.file.Files.createTempFile("nova-20240101", ".sql.gz")
     val out = new java.util.zip.GZIPOutputStream(
@@ -157,18 +159,12 @@ class DumpConvertSpec extends AnyFunSuite {
     val spark = graft.SparkTestSession.spark
     // a dump big enough to split at a small maxPartitionBytes: 2000
     // single-row INSERT lines (~160 KB decompressed)
-    val header =
-      """CREATE TABLE `instance_extra` (
-        |  `instance_uuid` varchar(36) NOT NULL,
-        |  `pci_requests` text
-        |);
-        |""".stripMargin
     val inserts = (1 to 2000).map(i =>
       s"INSERT INTO `instance_extra` VALUES ('instance-$i','[]');").mkString("\n")
     val gz = java.nio.file.Files.createTempFile("nova-split", ".sql.gz")
     val out = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(gz))
-    out.write((header + inserts + "\n").getBytes("UTF-8")); out.close()
+    out.write((fullDdl + inserts + "\n").getBytes("UTF-8")); out.close()
 
     val staged = DumpConvert.stageSplittable(spark, gz.toString)
     assert(!staged.endsWith(".gz"))
@@ -183,11 +179,20 @@ class DumpConvertSpec extends AnyFunSuite {
       assert(gzParts == 1, s"gz input expected 1 partition, got $gzParts")
       assert(stagedParts > 1,
         s"staged copy should split, got $stagedParts partition(s)")
-      // and the INSERT lines parse identically through the staged path
-      val rows = DumpConvert.loadTable(spark, gz.toString, "instance_extra")
-      assert(rows.rdd.getNumPartitions > 1)
-      assert(rows.count() == 2000)
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+      // and the INSERT lines parse identically through the staged path:
+      // one parquet part file per parse task
+      val conv = java.nio.file.Files.createTempDirectory("nova-split-pq").toString
+      DumpConvert.convert(spark, gz.toString, conv)
+      val parts = new java.io.File(s"$conv/instance_extra.parquet").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(parts > 1, s"parse should run in >1 task, wrote $parts part file(s)")
+      assert(spark.read.parquet(s"$conv/instance_extra.parquet").count() == 2000)
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+      // through Hadoop, which also removes the staged copy's .crc
+      val p = new org.apache.hadoop.fs.Path(staged)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
+    }
   }
 
   test("directory dump path is rejected: single-file contract") {
@@ -218,6 +223,7 @@ class DumpConvertSpec extends AnyFunSuite {
       |  `pci_requests` text
       |);
       |CREATE TABLE `instance_actions` (
+      |  `id` int NOT NULL AUTO_INCREMENT,
       |  `instance_uuid` varchar(36) NOT NULL,
       |  `created_at` datetime DEFAULT NULL,
       |  `action` varchar(255) DEFAULT NULL,
@@ -230,8 +236,8 @@ class DumpConvertSpec extends AnyFunSuite {
   private def extraInsert(uuid: String) =
     s"INSERT INTO `instance_extra` VALUES ('$uuid',NULL);\n"
   private def actionInserts(uuid: String) =
-    s"INSERT INTO `instance_actions` VALUES ('$uuid','2024-01-01 00:00:00','create','')," +
-      s"('$uuid','2024-01-01 10:00:00','delete','');\n"
+    s"INSERT INTO `instance_actions` VALUES (1,'$uuid','2024-01-01 00:00:00','create','')," +
+      s"(2,'$uuid','2024-01-01 10:00:00','delete','');\n"
 
   /** fetch.py's operational layout: dbs/<controller>/nova.sql[.gz] —
     * ctl-0's dump is TRUNCATED (instances has DDL but zero rows), ctl-1
@@ -335,52 +341,126 @@ class DumpConvertSpec extends AnyFunSuite {
     }
   }
 
-  test("--complete-insert form: explicit column lists realign to CREATE order") {
+  /** Convert `dump` (a `.sql` text) and read back one table's parquet. */
+  private def convertedTable(dump: String, table: String) = {
     val spark = graft.SparkTestSession.spark
+    val f = java.nio.file.Files.createTempFile("graft-dump", ".sql")
+    java.nio.file.Files.writeString(f, dump)
+    val out = java.nio.file.Files.createTempDirectory("graft-dump-pq").toString
+    DumpConvert.convert(spark, f.toString, out)
+    spark.read.parquet(s"$out/$table.parquet")
+  }
+
+  test("--complete-insert form: explicit column lists realign to CREATE order") {
     // columns listed in a DIFFERENT order than CREATE, and one CREATE
     // column (pci_requests) omitted from the list entirely → NULL
-    val dump =
-      """CREATE TABLE `instance_extra` (
-        |  `instance_uuid` varchar(36) NOT NULL,
-        |  `pci_requests` text
-        |);
-        |INSERT INTO `instance_extra` (`pci_requests`, `instance_uuid`) VALUES ('[]','i1');
+    val dump = fullDdl +
+      """INSERT INTO `instance_extra` (`pci_requests`, `instance_uuid`) VALUES ('[]','i1');
         |INSERT INTO `instance_extra` (`instance_uuid`) VALUES ('i2');
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("graft-dump-ci", ".sql")
-    java.nio.file.Files.writeString(f, dump)
-    val rows = DumpConvert.loadTable(spark, f.toString, "instance_extra")
+    val rows = convertedTable(dump, "instance_extra")
       .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
     assert(rows == Set(("i1", Some("[]")), ("i2", None)))
   }
 
   test("CREATE TABLE with zero INSERTs yields an empty, correctly-typed table") {
-    val spark = graft.SparkTestSession.spark
-    val dump =
-      """CREATE TABLE `instance_extra` (
-        |  `instance_uuid` varchar(36) NOT NULL,
-        |  `pci_requests` text
-        |);
-        |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("graft-dump-empty", ".sql")
-    java.nio.file.Files.writeString(f, dump)
-    val df = DumpConvert.loadTable(spark, f.toString, "instance_extra")
+    val df = convertedTable(fullDdl, "instance_extra")
     assert(df.count() == 0)
     assert(df.schema.fieldNames.toSeq == Seq("instance_uuid", "pci_requests"))
   }
 
   test("missing pipeline column in the dump fails loudly") {
-    val spark = graft.SparkTestSession.spark
-    val dump =
-      """CREATE TABLE `instances` (
-        |  `uuid` varchar(36) NOT NULL
-        |);
-        |INSERT INTO `instances` VALUES ('i1');
-        |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("graft-dump-bad", ".sql")
-    java.nio.file.Files.writeString(f, dump)
+    // instance_actions without `id`, the same-second tiebreak
+    val dump = fullDdl.replace("  `id` int NOT NULL AUTO_INCREMENT,\n", "")
     val e = intercept[IllegalArgumentException](
-      DumpConvert.loadTable(spark, f.toString, "instances"))
-    assert(e.getMessage.contains("lacks columns"))
+      convertedTable(dump, "instance_actions"))
+    assert(e.getMessage.contains("lacks columns the pipeline needs: id"))
+  }
+
+  /** Run the CLI over `args` for January 2024 and return the invoice's
+    * first data row by column name.
+    */
+  private def januaryInvoice(args: String*): Map[String, String] = {
+    val outDir = java.nio.file.Files.createTempDirectory("nova-csv").toString
+    graft.Main.run(graft.Main.parseArgs(args ++ Seq(
+      "--output-dir", outDir,
+      "--start", "2024-01-01", "--end", "2024-02-01",
+      "--invoice-month", "2024-01",
+      "--rate-cpu-su", "0.013")), graft.SparkTestSession.spark)
+    val lines = new String(InvoiceSink.readCsvBytes(outDir), "UTF-8").split("\n").toSeq
+    lines.head.split(",", -1).zip(lines(1).split(",", -1)).toMap
+  }
+
+  test("same-second shelve/unshelve split across parse tasks bills in id order") {
+    val spark = graft.SparkTestSession.spark
+    // one 1-SU instance, created at the window start, shelved and
+    // unshelved in the same second on Jan 10. In id order it runs the
+    // whole month (744 h); the reverse order leaves it shelved from
+    // Jan 10 on (216 h). The shelve sits in the first 8 KB split of the
+    // dump, the unshelve in the second, which also carries 300 filler
+    // actions, so its converted part file is the larger one and a
+    // size-ordered parquet scan reads it first.
+    val head = fullDdl +
+      "INSERT INTO `instances` VALUES ('i1','host1',1,4096,1,NULL,0,'projA');\n" +
+      extraInsert("i1") +
+      "INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create','')," +
+      "(2,'i1','2024-01-10 00:00:00','shelve','');\n"
+    // a line starting exactly at a split boundary still belongs to the
+    // split before it, so the unshelve line starts well past it
+    val split = 8192
+    val padding = "-- padding\n" * ((split - head.length) / 11 + 10)
+    val tail = "INSERT INTO `instance_actions` VALUES (3,'i1','2024-01-10 00:00:00','unshelve','')" +
+      (4 to 303).map(i => s",($i,'i1','2024-01-12 00:00:00','attach_volume','')").mkString +
+      ";\n"
+    assert(head.length < split && (head + padding).length > split,
+      "the shelve and unshelve lines must start in different splits")
+    val dump = java.nio.file.Files.createTempFile("nova-straddle", ".sql")
+    java.nio.file.Files.writeString(dump, head + padding + tail)
+
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    val byCol =
+      try {
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
+        januaryInvoice("--dump-file", dump.toString)
+      } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    java.nio.file.Files.delete(dump)
+    assert(byCol("SU Hours (GBhr or SUhr)") == "744")
+  }
+
+  test("a run leaves no graft-* temp entries; a truncated .gz fails naming the dump") {
+    // start the shared session first: it makes a graft-warehouse dir of its own
+    graft.SparkTestSession.spark
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    // the staged gunzip copy also has a hidden `.graft-stage-*.crc`
+    def graftEntries(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.contains("graft-")).toSet
+      finally ls.close()
+    }
+    val before = graftEntries()
+
+    val body = (fullDdl + instInsert("i1") + extraInsert("i1") + actionInserts("i1"))
+      .getBytes("UTF-8")
+    val bos = new java.io.ByteArrayOutputStream()
+    val gzOut = new java.util.zip.GZIPOutputStream(bos)
+    gzOut.write(body); gzOut.close()
+    val gzBytes = bos.toByteArray
+    val good = java.nio.file.Files.createTempFile("nova-good", ".sql.gz")
+    java.nio.file.Files.write(good, gzBytes)
+    val truncated = java.nio.file.Files.createTempFile("nova-truncated", ".sql.gz")
+    java.nio.file.Files.write(truncated, gzBytes.take(gzBytes.length / 2))
+    try {
+      assert(januaryInvoice("--dump-file", good.toString)("Cost") == "0.26")
+      assert(graftEntries() -- before == Set.empty)
+
+      val e = intercept[java.io.IOException](
+        januaryInvoice("--dump-file", truncated.toString))
+      assert(e.getMessage.contains(truncated.toString), e.getMessage)
+      assert(graftEntries() -- before == Set.empty)
+    } finally {
+      java.nio.file.Files.delete(good)
+      java.nio.file.Files.delete(truncated)
+    }
   }
 }

@@ -52,12 +52,13 @@ class DumpFetchSpec extends AnyFunSuite {
       |);
       |INSERT INTO `instance_extra` VALUES ('i1',NULL);
       |CREATE TABLE `instance_actions` (
+      |  `id` int NOT NULL AUTO_INCREMENT,
       |  `instance_uuid` varchar(36) NOT NULL,
       |  `created_at` datetime DEFAULT NULL,
       |  `action` varchar(255) DEFAULT NULL,
       |  `message` varchar(255) DEFAULT NULL
       |);
-      |INSERT INTO `instance_actions` VALUES ('i1','2024-01-01 00:00:00','create',''),('i1','2024-01-01 10:00:00','delete','');
+      |INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create',''),(2,'i1','2024-01-01 10:00:00','delete','');
       |""".stripMargin
 
   private def writeGz(path: java.nio.file.Path, content: String): Unit = {
@@ -125,15 +126,5 @@ class DumpFetchSpec extends AnyFunSuite {
         "--output-dir", outDir, "--rate-cpu-su", "0.013")), spark)
     }
     assert(e.getMessage == "No database dumps found for 20240101")
-  }
-
-  test("local path, gunzip-name derivation, s3a form") {
-    val key = "dbs/nerc-ctl-0/nova-20240202000002.sql.gz"
-    assert(DumpFetch.localDownloadPath(key) == "/tmp/nova-20240202000002.sql.gz")
-    assert(DumpFetch.uncompressedPath("/tmp/nova-20240202000002.sql.gz") ==
-      "/tmp/nova-20240202000002.sql")
-    assert(DumpFetch.uncompressedPath("/tmp/nova.sql") == "/tmp/nova.sql")
-    assert(DumpFetch.s3aUri("nerc-osp-backups", key) ==
-      "s3a://nerc-osp-backups/dbs/nerc-ctl-0/nova-20240202000002.sql.gz")
   }
 }

@@ -55,8 +55,8 @@ class OutagesConfigSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dataDir/instances.parquet")
     Seq(("i1", null: String)).toDF("instance_uuid", "pci_requests")
       .write.mode("overwrite").parquet(s"$dataDir/instance_extra.parquet")
-    Seq(("i1", ts(start), "create", ""), ("i1", ts(start + 10 * HOUR), "delete", ""))
-      .toDF("instance_uuid", "created_at", "action", "message")
+    Seq((1L, "i1", ts(start), "create", ""), (2L, "i1", ts(start + 10 * HOUR), "delete", ""))
+      .toDF("id", "instance_uuid", "created_at", "action", "message")
       .write.mode("overwrite").parquet(s"$dataDir/instance_actions.parquet")
     val outagesFile = java.nio.file.Files.createTempFile("outages", ".csv")
     // 4h outage inside the instance's 10h run; the other cluster's outage

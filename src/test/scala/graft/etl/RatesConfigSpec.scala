@@ -142,8 +142,8 @@ class RatesConfigSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dataDir/instances.parquet")
     Seq(("i1", null: String)).toDF("instance_uuid", "pci_requests")
       .write.mode("overwrite").parquet(s"$dataDir/instance_extra.parquet")
-    Seq(("i1", ts(start), "create", ""), ("i1", ts(start + 10 * HOUR), "delete", ""))
-      .toDF("instance_uuid", "created_at", "action", "message")
+    Seq((1L, "i1", ts(start), "create", ""), (2L, "i1", ts(start + 10 * HOUR), "delete", ""))
+      .toDF("id", "instance_uuid", "created_at", "action", "message")
       .write.mode("overwrite").parquet(s"$dataDir/instance_actions.parquet")
     val ratesFile = java.nio.file.Files.createTempFile("rates", ".yaml")
     java.nio.file.Files.writeString(ratesFile, yaml)

@@ -76,7 +76,7 @@ class RuntimeSqlEquivalenceSpec extends AnyFunSuite {
       val actual = got.get(i.key)
       val matches = actual match {
         case Some((r, s)) => r == expected.runningUs && s == expected.stoppedUs
-        case None => expected == Types.Runtime.zero // no state-mapped events
+        case None => expected == Types.Runtime(0L, 0L) // no state-mapped events
       }
       assert(matches,
         s"key=${i.key} seed=$seed expected=(${expected.runningUs},${expected.stoppedUs}) got=$actual " +
